@@ -341,7 +341,7 @@ def bench_receiver_ingest(ctx: Ctx):
     stream_ingest (append; fresh sinks + an acked backlog are exactly-once
     already — the E1 merge-vs-redelivery pairing is pinned by the
     FileSubscription e2e pytest, not re-benched here), overlapped from two
-    driver threads exactly as run_stream does under a deterministic clock.
+    driver threads exactly as run_stream does.
     Compare with stream_ingest — same rows and sink mode, file source vs
     leased receiver; the delta is the receiver contract (lease accounting,
     candidate listing, ack bookkeeping — acked ids and lease groups live
@@ -392,10 +392,10 @@ def bench_receiver_ingest(ctx: Ctx):
     wcfg = fixtures.fixture_ingest_config()
     wb = warm.pull(ctx.spark)
     if not wb.isEmpty():
-        # persist_intermediate follows run_stream's dispatch (r15 opt): a
-        # deterministic clock_column means the two sinks recompute
-        # identical values and overlap instead of serializing on the
-        # cache fill — same rows, same writes, same timed methodology
+        # cache only for a wall-clock mask: outside a stream,
+        # current_timestamp() is evaluated once per action.  A
+        # clock_column lets the two sinks recompute identical values and
+        # overlap instead of serializing on the cache fill
         wres = ingest.run_batch(
             decode_pubsub(wb, "persistor-sub"),
             wcfg,
@@ -427,7 +427,7 @@ def bench_receiver_ingest(ctx: Ctx):
         res = ingest.run_batch(
             decode_pubsub(batch, "persistor-sub"),
             cfg,
-            # run_stream's dispatch rule: cache only for wall-clock masks
+            # cache only for a wall-clock mask (see the warm-up above)
             persist_intermediate=cfg.clock_column is None,
             blob_name=F.concat(F.col("broker_id"), F.lit(f"-p{pulls}")),
         )

@@ -21,7 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from persistor_spark.config import IngestConfig
 from persistor_spark.functions import keys
@@ -41,10 +41,16 @@ DL_SOURCE_INDEXER = "Dataphos Persistor - Indexer"
 
 
 def _is_path_missing(exc: AnalysisException) -> bool:
-    """True iff the AnalysisException means 'no table at this path yet'."""
+    """True iff the AnalysisException means 'no table at this path yet': no
+    directory, or a directory holding no data file (a zero-row first append
+    to a partitioned table leaves only its _SUCCESS marker)."""
     cond = getattr(exc, "getCondition", lambda: None)() or ""
     msg = str(exc)
-    return "PATH_NOT_FOUND" in cond or "Path does not exist" in msg
+    return (
+        "PATH_NOT_FOUND" in cond
+        or "UNABLE_TO_INFER_SCHEMA" in cond
+        or "Path does not exist" in msg
+    )
 
 
 @dataclass
@@ -76,6 +82,26 @@ def clock_sql(cfg: IngestConfig) -> str:
     from persistor_spark.functions.sqlq import sql_ident
 
     return sql_ident(cfg.clock_column) if cfg.clock_column else "current_timestamp()"
+
+
+def _content_hash(clock: Column) -> Column:
+    """64-bit hash of every message column either sink writes, NULLs
+    included (to_json names each field, so a value cannot move between
+    fields unnoticed): the run_batch position window's tiebreak."""
+    return F.xxhash64(
+        F.to_json(
+            F.struct(
+                "payload",
+                "publish_time",
+                "ingestion_time",
+                "ordering_key",
+                "business_source_key",
+                "business_object_key",
+                "attributes",
+                clock.alias("clock"),
+            )
+        )
+    )
 
 
 def run_batch(
@@ -156,7 +182,11 @@ def run_batch(
     )
     mask_names = list(mask_cols)
     live = live.withColumns(
-        {"location_key": lk, "unique_id": keys.unique_id()}
+        {
+            "location_key": lk,
+            "unique_id": keys.unique_id(),
+            "__content": _content_hash(clock),
+        }
     )
     # Fused position pass (r14 opt, guide §2.1): the index's
     # `location_position` and the blob records' `position` are the SAME
@@ -168,9 +198,22 @@ def run_batch(
     # pass over the batch).  Values are unchanged: with_positions /
     # with_blob_positions produced identical row numbers from identical
     # (partition, order) specs.
+    #
+    # The ORDER BY breaks unique_id ties by the row's content: an
+    # at-least-once source can redeliver one unique_id twice in a batch with
+    # different content, and the default streaming path evaluates this
+    # window once PER SINK (no cache), so both evaluations must hand each
+    # delivery the same position.  The content enters as a 64-bit hash
+    # (`__content`, a column so both window functions share one sort), and
+    # each sink's shuffle carries 8 more bytes per row.  Ordering by the
+    # raw columns would ship the payload through the index sink's shuffle
+    # too, and AQE then splits the index write into more files for readers
+    # to open.  Deliveries that still tie are identical in what the sinks
+    # write, barring a 2^-64 hash collision.  Distinct unique_ids never
+    # reach the tiebreak, so their positions are unchanged.
     from pyspark.sql import Window as _W
 
-    _w = _W.partitionBy("location_key").orderBy("unique_id")
+    _w = _W.partitionBy("location_key").orderBy("unique_id", "__content")
     live = live.withColumns(
         {
             "__pos": F.row_number().over(_w).cast("int"),
@@ -180,7 +223,8 @@ def run_batch(
         }
     )
     # blob and index projections fork here; caching the shared prefix stops
-    # each sink's action from re-deriving it (used by bench + foreachBatch)
+    # each sink's action from re-deriving it (used by bench, and by
+    # foreachBatch under a failure hook)
     if persist_intermediate:
         live = live.persist()
 
@@ -267,12 +311,12 @@ def write_index_merge(result: IngestResult, path: str, lock_path: str | None = N
         # surface, or a transient error silently appends duplicates.
         if not _is_path_missing(exc):
             raise
-    new = new.persist()
-    n = new.count()
-    if n:
-        new.write.mode("append").parquet(path)
-    new.unpersist()
-    return n
+    # ONE job: the appended-row count rides the write as an Observation.
+    # An empty append still writes Spark's zero-row schema file here (the
+    # table is unpartitioned); it holds no rows for the anti-join to see.
+    obs = Observation()
+    new.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(path)
+    return obs.get["n"]
 
 
 _AVRO_CHECKED: dict = {}
@@ -367,23 +411,24 @@ def write_blobs_merge(
     except AnalysisException as exc:
         if not _is_path_missing(exc):
             raise
-    new = new.persist()
-    n = new.count()
-    if n:
-        # same mask repartition as write_blobs (see its comment): the
-        # anti-join leaves rows hash-distributed on the join key, so every
-        # write task would otherwise open a file in EVERY mask directory —
-        # the small-files explosion, on the DEFAULT streaming blob path
-        spark_ctx = new.sparkSession.sparkContext
-        (
-            new.repartition(spark_ctx.defaultParallelism, *result.mask_column_names)
-            .write.mode("append")
-            .partitionBy(*result.mask_column_names)
-            .format(fmt)
-            .save(path)
-        )
-    new.unpersist()
-    return n
+    # same mask repartition as write_blobs (see its comment): the anti-join
+    # leaves rows hash-distributed on the join key, so every write task
+    # would otherwise open a file in EVERY mask directory — the small-files
+    # explosion, on the DEFAULT streaming blob path.  ONE job, counted by
+    # an Observation as in write_index_merge; an empty append writes no
+    # file, since the partitioned writer opens files on the first row.  The
+    # Observation sits ABOVE the repartition: AQE replaces a shuffle stage
+    # whose output is empty, and any Observation inside it is lost.
+    obs = Observation()
+    (
+        new.repartition(spark.sparkContext.defaultParallelism, *result.mask_column_names)
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .write.mode("append")
+        .partitionBy(*result.mask_column_names)
+        .format(fmt)
+        .save(path)
+    )
+    return obs.get["n"]
 
 
 def write_index_bucketed(

@@ -102,6 +102,12 @@ def _interval_bounds(params: dict) -> tuple[datetime, datetime]:
 
 
 class _JsonHandler(BaseHTTPRequestHandler):
+    # Buffered writes: the status line, headers and body of a reply leave
+    # in one send when the request finishes, instead of one unbuffered send
+    # for the headers and another for the body, which a client reading a
+    # single segment sees as a reply without a body.
+    wbufsize = -1
+
     # quiet default request logging (gin's access log is its own concern)
     def log_message(self, fmt, *args):  # noqa: D401
         pass

@@ -53,6 +53,11 @@ def build_session(
         # byte-adaptive (advisoryPartitionSizeInBytes), the scale-correct
         # behavior at any core count: a 100 TB batch still materializes many
         # partitions, a small one collapses to few (guide §2.2/§6).
+        # Invariant while this is on: a cached plan's partitioning depends
+        # on data size and core count, so a cached shuffle output must not
+        # feed a float aggregation whose result is pinned bit for bit.  The
+        # k-means/PQ training inputs satisfy it: each is a localCheckpoint
+        # or a persisted narrow projection, with no shuffle to re-plan.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

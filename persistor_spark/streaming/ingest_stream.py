@@ -28,13 +28,17 @@ carry Delta.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from persistor_spark.config import IngestConfig
 from persistor_spark.plans import ingest
 from persistor_spark.schemas import MESSAGE_SCHEMA
+
+# Stream-plan column holding the micro-batch timestamp when the config sets
+# no clock column (see run_stream).
+BATCH_CLOCK_COLUMN = "_batch_clock"
 
 
 def kafka_source_options(cfg: IngestConfig, bootstrap: str, topic: str) -> dict:
@@ -189,19 +193,20 @@ def run_stream(
     stable across checkpoint replays, which first-message-id naming under
     redelivery is not.
 
+    Wall clock: with `cfg.clock_column=None` the clock is the MICRO-BATCH
+    timestamp.  `current_timestamp()` is added as a column of the streaming
+    plan, where MicroBatchExecution substitutes the batch's
+    `batchTimestampMs` and records it in `offsets/<batch>`, so every action
+    on a batch — and every replay of it — sees the same instant.  The
+    derivation is then value-deterministic on every path.
+
     Exactly-once (E1): both sinks default to the anti-join MERGE writers
     (write_blobs_merge on (location_key, record_id), write_index_merge on
-    unique_id).  With a deterministic `cfg.clock_column`, a batch that
-    fails between the two writes — or a source redelivery — re-runs with
-    the SAME batch_id, derives the SAME location_keys, finds its rows
-    present, and appends nothing.  With the WALL-CLOCK default a replay
-    that crosses a mask boundary (midnight) derives NEW location_keys; the
-    sinks then run blobs-strictly-before-index so every crash state stays
-    consistent (the index never references a key whose blobs are absent —
-    the worst case is orphaned first-attempt blobs, and the index merge on
-    unique_id still dedups the rows themselves).  Set the flags False only
-    for fire-and-forget bulk loads where the source is exactly-once end to
-    end.
+    unique_id).  A batch that fails between the two writes — or a source
+    redelivery — re-runs with the SAME batch_id and clock, derives the SAME
+    location_keys, finds its rows present, and appends nothing.  Set the
+    flags False only for fire-and-forget bulk loads where the source is
+    exactly-once end to end.
 
     `failure` mirrors run_batch's injection hook (rows -> DLQ);
     `fault_injector(batch_id)` is called between the blob and index writes
@@ -222,6 +227,11 @@ def run_stream(
         # disorder (a backfill replaying days of history needs a wide one,
         # or older-than-watermark batches are dropped as late)
         messages = _windows.dedup_gate_rows(messages, watermark=dedup_gate_watermark)
+    if cfg.clock_column is None:
+        # no leading "__": the handler drops those columns as parse
+        # bookkeeping
+        messages = messages.withColumn(BATCH_CLOCK_COLUMN, F.current_timestamp())
+        cfg = replace(cfg, clock_column=BATCH_CLOCK_COLUMN)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         # With no failure hook and no parse split, the dead-letter frame is
@@ -246,23 +256,17 @@ def run_stream(
             invalid = batch_df.filter(F.col("__invalid")).select(*cols)
             batch_df = batch_df.filter(~F.col("__invalid")).select(*cols)
         # Cache the shared derivation prefix ONLY when it is a correctness
-        # device (r15 opt, guide §5 "caching is only worth it when..."):
-        # with a WALL-CLOCK mask the two sinks must read the ONE evaluated
-        # current_timestamp() (a midnight-crossing batch would otherwise
-        # write blobs and index under different masks), and an injected
-        # `failure` Column may be non-deterministic, so the good/bad split
-        # must be evaluated once.  Under a configured clock column with no
-        # failure hook the derivation is value-deterministic: the sinks
-        # recompute identical rows independently and OVERLAP fully instead
-        # of serializing on the cache fill's block locks — measured 1.0 s
-        # vs 1.1-2.4 s per batch for the threaded two-sink flow, plus the
-        # per-batch persist/unpersist churn removed.
-        deterministic = cfg.clock_column is not None and failure is None
+        # device: an injected `failure` Column may be non-deterministic, so
+        # the good/bad split must be evaluated once.  Otherwise the
+        # derivation is value-deterministic (the clock is a column, the
+        # position window a total order), so each sink recomputes identical
+        # rows on its own and the two OVERLAP instead of serializing on a
+        # cache fill.
         result = ingest.run_batch(
             batch_df,
             cfg,
             failure=failure,
-            persist_intermediate=not deterministic,
+            persist_intermediate=failure is not None,
             blob_name=F.concat(F.col("broker_id"), F.lit(f"-b{batch_id}")),
         )
         def do_blobs() -> None:
@@ -278,12 +282,10 @@ def run_stream(
             else:
                 ingest.write_blobs(result, sinks.blob_path, fmt=sinks.blob_format)
 
-        from dataclasses import replace as _dc_replace
-
         from pyspark.sql import Observation
 
         idx_obs = Observation()
-        result = _dc_replace(
+        result = replace(
             result,
             index_metadata=result.index_metadata.observe(
                 idx_obs, F.count(F.lit(1)).alias("n")
@@ -302,26 +304,13 @@ def run_stream(
             do_blobs()
             fault_injector(batch_id)
             do_index()
-        elif cfg.clock_column is None:
-            # WALL-CLOCK mask (production default): a replay that crosses a
-            # mask time boundary (midnight) derives DIFFERENT location_keys,
-            # so the merge anti-joins cannot recognize the first attempt's
-            # rows.  Writing blobs strictly BEFORE the index keeps every
-            # crash state consistent anyway: index rows always point at a
-            # location_key whose blobs were already persisted (a replay
-            # re-writes both under the new key; the first attempt's
-            # index-less blobs are orphaned storage, never dangling
-            # references).  Concurrent sinks would allow the reverse order.
-            do_blobs()
-            do_index()
         else:
-            # Deterministic clock column: replays derive the SAME
-            # location_keys, so ordering between the sinks carries no
-            # guarantee and they overlap from two driver threads: both
-            # consume the SAME persisted intermediate (BlockManager computes
-            # each cached partition once; the second job blocks on the block
-            # lock, never recomputes) — the batch's wall-clock is
-            # max(blobs, index) instead of the sum.
+            # Replays derive the SAME location_keys (the clock is a column),
+            # so ordering between the sinks carries no guarantee and they
+            # overlap from two driver threads: the batch's wall-clock is
+            # max(blobs, index) instead of the sum.  Each sink recomputes
+            # the derivation, except under a `failure` hook, where both read
+            # the one cached copy.
             import concurrent.futures as _cf
 
             with _cf.ThreadPoolExecutor(max_workers=2) as pool:

@@ -187,3 +187,39 @@ def test_split_location_url_parse(spark, ingested):
     assert row["b"] == "persistor-bucket"
     assert row["location_key"].endswith(row["p"])
     assert row["p"].startswith("msg/")
+
+
+def test_duplicate_id_positions_follow_content_not_arrival(spark, sf_dir):
+    """Redeliveries of one unique_id inside a batch are numbered by their
+    content, not by the order they arrive in: the same rows fed in two
+    different physical orders get the same (location_key, position) per
+    delivery, on the blob side and the index side alike."""
+    msgs = fixtures.load_messages(spark, sf_dir).filter(F.col("event_seq") < 200)
+    again = F.lit("#again")
+    dupes = msgs.filter(F.col("event_seq") % 4 == 0).withColumns(
+        {
+            "payload": F.concat(F.coalesce("payload", F.lit("")), again),
+            "ordering_key": F.concat(F.coalesce("ordering_key", F.lit("")), again),
+        }
+    )
+    rows = msgs.unionByName(dupes).withColumn("k", F.monotonically_increasing_id())
+    cfg = fixtures.fixture_ingest_config()
+
+    def assigned(order):
+        batch = rows.orderBy(order).coalesce(1).drop("k")
+        res = ingest.run_batch(batch, cfg)
+        blobs = {
+            (r["record_id"], r["payload"]): (r["location_key"], r["position"])
+            for r in res.blob_records.collect()
+        }
+        index = sorted(
+            (r["unique_id"], r["ordering_key"] or "", r["location_key"], r["location_position"])
+            for r in res.index_metadata.collect()
+        )
+        return blobs, index
+
+    fwd_blobs, fwd_index = assigned(F.col("k").asc())
+    rev_blobs, rev_index = assigned(F.col("k").desc())
+    assert len(fwd_blobs) == rows.count()
+    assert fwd_blobs == rev_blobs
+    assert fwd_index == rev_index

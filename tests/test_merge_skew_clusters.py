@@ -209,3 +209,31 @@ def test_manifest_lookup_resilient_heals_stale_resident_rows(spark, tmp_path):
     )
     assert fresh is not None, "stale resident rows must fire the heal"
     assert sorted(map(tuple, after.collect())) == want
+
+
+def test_merge_writers_noop_replay(spark, tmp_path, ingested):
+    """Replaying the same result through both merge writers returns 0 and
+    appends no row.  The mask-partitioned blob table gains no file; the
+    unpartitioned index gains at most Spark's zero-row schema file, which
+    every empty append writes."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    blobs, index = str(tmp_path / "blobs"), str(tmp_path / "idx")
+    n = ingested.index_metadata.count()
+    assert ingest.write_blobs_merge(ingested, blobs, fmt="parquet") == n
+    assert ingest.write_index_merge(ingested, index) == n
+
+    def files(path):
+        return set(glob.glob(path + "/**/*.parquet", recursive=True))
+
+    blob_files, index_files = files(blobs), files(index)
+    assert ingest.write_blobs_merge(ingested, blobs, fmt="parquet") == 0
+    assert ingest.write_index_merge(ingested, index) == 0
+    assert files(blobs) == blob_files
+    added = files(index) - index_files
+    assert len(added) <= 1
+    assert all(pq.read_metadata(f).num_rows == 0 for f in added)
+    assert spark.read.parquet(blobs).count() == n
+    assert spark.read.parquet(index).count() == n

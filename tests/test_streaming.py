@@ -652,3 +652,134 @@ def test_dedup_stream_compact_small_every_preserves_index(spark, sf_dir, tmp_pat
     assert per_band and max(per_band.values()) <= 3, per_band
     # no maintenance debris
     assert glob.glob(f"{index_path}.__smallcompact_*") == []
+
+
+def _redeliveries(spark, sf_dir):
+    """Fixture messages plus two DIVERGENT redeliveries of every fifth one:
+    same broker_id/broker_msg_id, different payload, ordering_key and
+    attributes.  Each delivery carries its tag `dN` in the payload suffix
+    and in a `delivery` attribute, so an index row names its delivery."""
+    msgs = fixtures.load_messages(spark, sf_dir).filter(F.col("event_seq") < 300)
+    tagged = []
+    for d in range(3):
+        part = msgs if d == 0 else msgs.filter(F.col("event_seq") % 5 == 0)
+        tag = F.lit(f"d{d}")
+        tagged.append(
+            part.withColumns(
+                {
+                    "payload": F.concat(F.coalesce("payload", F.lit("")), F.lit("#"), tag),
+                    "ordering_key": F.concat(F.coalesce("ordering_key", F.lit("")), tag),
+                    "attributes": F.map_concat(
+                        F.coalesce("attributes", F.create_map().cast("map<string,string>")),
+                        F.create_map(F.lit("delivery"), tag),
+                    ),
+                }
+            )
+        )
+    out = tagged[0]
+    for t in tagged[1:]:
+        out = out.unionByName(t)
+    return msgs, out
+
+
+def test_same_batch_redeliveries_resolve_to_their_own_blob(spark, sf_dir, tmp_path):
+    """Default config (wall clock, no cache, overlapped sinks): each sink
+    evaluates the position window on its own, so duplicate unique_ids in
+    one micro-batch must get the same position on both sides.  Every index
+    row's (location_key, location_position) must resolve to the blob
+    record of the SAME delivery."""
+    from persistor_spark.config import IngestConfig
+
+    msgs, deliveries = _redeliveries(spark, sf_dir)
+    src = str(tmp_path / "redeliv")
+    # one shuffled file -> one micro-batch holding every delivery
+    deliveries.orderBy(F.rand(7)).coalesce(1).write.parquet(src)
+    sinks = _sinks(tmp_path, "redeliv_out")
+    q, metrics = ingest_stream.run_stream(
+        ingest_stream.file_stream(spark, src), IngestConfig(), sinks
+    )
+    assert q.awaitTermination(300)
+    assert metrics.batches == 1
+
+    idx = spark.read.parquet(sinks.index_path)
+    blobs = spark.read.parquet(sinks.blob_path)
+    n_dupes = msgs.filter(F.col("event_seq") % 5 == 0).count()
+    assert n_dupes > 0
+    assert idx.count() == deliveries.count()
+    resolved = idx.select(
+        "location_key",
+        F.coalesce("location_position", F.lit(1)).alias("position"),
+        F.col("additional_metadata")["delivery"].alias("idx_tag"),
+        F.col("unique_id"),
+    ).join(blobs, ["location_key", "position"])
+    assert resolved.count() == idx.count()
+    wrong = resolved.filter(
+        (F.col("record_id") != F.col("unique_id"))
+        | (F.col("metadata")["delivery"] != F.col("idx_tag"))
+        | ~F.col("payload").endswith(F.concat(F.lit("#"), F.col("idx_tag")))
+    )
+    assert wrong.count() == 0
+
+
+def test_wall_clock_is_the_batch_timestamp_across_a_replay(spark, sf_dir, tmp_path):
+    """clock_column=None stamps each micro-batch with its offset-log
+    timestamp: a batch that crashes between the blob and index writes
+    replays with the SAME clock, so indexer_ingestion_time - skew equals
+    offsets/<batch>.batchTimestampMs for every batch, and every blob
+    location_key the first attempt wrote is referenced by the index."""
+    import os
+
+    msgs = fixtures.load_messages(spark, sf_dir)
+    src = str(tmp_path / "src")
+    # one non-empty file per micro-batch
+    for i in range(3):
+        msgs.filter(F.col("event_seq") % 3 == i).coalesce(1).write.mode("append").parquet(src)
+    base = fixtures.fixture_ingest_config()
+    cfg = type(base)(
+        storage=base.storage,
+        version_keys=base.version_keys,
+        clock_column=None,
+        indexer_clock_skew_s=base.indexer_clock_skew_s,
+    )
+    sinks = _sinks(tmp_path, "wallclock")
+    crashed = []
+
+    def crash_once(batch_id):
+        if batch_id == 1 and not crashed:
+            crashed.append(batch_id)
+            raise RuntimeError("injected: crashed between blob and index write")
+
+    total = ingest_stream.run_stream_supervised(
+        lambda: ingest_stream.file_stream(spark, src, max_files_per_trigger=1),
+        cfg,
+        sinks,
+        fault_injector=crash_once,
+    )
+    assert crashed == [1]
+    assert total.batches >= 3
+
+    def batch_ts_ms(batch_id):
+        with open(os.path.join(sinks.checkpoint_path, "offsets", str(batch_id))) as fh:
+            return json.loads(fh.read().splitlines()[1])["batchTimestampMs"]
+
+    idx = spark.read.parquet(sinks.index_path)
+    per_batch = (
+        idx.select(
+            F.regexp_extract("location_key", r"-b(\d+)\.", 1).cast("int").alias("b"),
+            (
+                F.unix_micros("indexer_ingestion_time")
+                - F.lit(cfg.indexer_clock_skew_s * 1_000_000)
+            ).alias("clock_us"),
+        )
+        .groupBy("b")
+        .agg(F.collect_set("clock_us").alias("clocks"))
+        .collect()
+    )
+    assert sorted(r["b"] for r in per_batch) == [0, 1, 2]
+    for r in per_batch:
+        assert r["clocks"] == [batch_ts_ms(r["b"]) * 1000], r["b"]
+
+    blob_keys = spark.read.parquet(sinks.blob_path).select("location_key").distinct()
+    orphaned = blob_keys.join(idx.select("location_key").distinct(), "location_key", "left_anti")
+    assert orphaned.count() == 0
+    assert idx.count() == idx.select("unique_id").distinct().count()
